@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import scala.util.control.NonFatal
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR.
   *
@@ -255,13 +256,7 @@ object Bench {
     val tStart = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - tStart) / 1e9
     def budgetFrac: Double = if (budget <= 0) 0.0 else elapsed / budget
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("bench", cpus, cpus.toInt)
     val all = (SparkEntry.queries ++ SparkEntry.benchExtras)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     // cross-window guard input: what this suite historically costs at
@@ -317,7 +312,9 @@ object Bench {
       val it = rows.iterator
       while (it.hasNext && (budget <= 0 || elapsed < budget * 0.3)) {
         val (name, fn) = it.next()
-        try fn(spark, sfDir).count() catch { case _: Throwable => () }
+        try fn(spark, sfDir).count() catch { case NonFatal(e) =>
+          Console.err.println(s"[bench] warmup $name failed: ${e.getClass.getName}: ${e.getMessage}")
+        }
         graft.util.CacheRegistry.releaseAll()
         warmed += name
       }
@@ -461,7 +458,10 @@ object Bench {
           while (extra.size < passes && budgetFrac < 0.95 &&
               crossWindowSuspect(robustMedian(ts ++ extra.toSeq, passes), trailing(k)))
             extra += sample()
-        } catch { case _: Throwable => graft.util.CacheRegistry.releaseAll() }
+        } catch { case NonFatal(e) =>
+          Console.err.println(s"[bench] suspect retry $k failed: ${e.getClass.getName}: ${e.getMessage}")
+          graft.util.CacheRegistry.releaseAll()
+        }
         if (extra.nonEmpty) {
           suspectRetried(k) = extra.size
           Console.err.println(f"[bench] suspect retry: $k%s took ${extra.size}%d " +

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with scale-minded defaults.
+/** The one session factory: every main, test and the benchmark builds
+  * its session here, so all of them plan with the same confs.
   *
   * Local runs use `local[N]` with `spark.sql.shuffle.partitions` sized to
   * the core count (not the 200 default); on a real cluster the same confs
@@ -41,12 +42,4 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
-
-  /** Apply graft's conf set to an externally-built session builder. */
-  def tune(b: SparkSession.Builder): SparkSession.Builder =
-    b.withExtensions(new GraftExtensions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 }

@@ -190,13 +190,7 @@ object ScaleSmoke {
     val passes = sys.env.getOrElse("SPARK_GRAFT_SF1_PASSES", "2").toInt.max(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("scale-smoke", cpus, cpus.toInt)
 
     synthesize(spark, srcDir, outDir, factor)
 

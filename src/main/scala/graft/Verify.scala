@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -10,13 +10,7 @@ object Verify {
     // iteration on one oracle (the driver always passes two args)
     val only = args.lift(2).map(_.split(",").toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("verify", cpus, cpus.toInt)
     new java.io.File(outDir).mkdirs()
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries
@@ -24,13 +18,13 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         // a failed query must surface as an explicit record, never a
         // silent omission: a missing result dir would read as "query not
         // claimed" in the driver compare and mask a regression (the r7
         // ts-encoding break produced an all-pass artifact this way)
         failures += name -> s"${e.getClass.getSimpleName}: ${e.getMessage}"
-        System.err.println(s"[verify] $name FAILED: ${e.getMessage}")
+        System.err.println(s"[verify] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
         // and a failed query must never leave a STALE result from a
         // previous run in place either — if the driver reuses outDir,
         // old parquet would compare as passing (r8 ADVICE)

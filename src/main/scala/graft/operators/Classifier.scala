@@ -52,7 +52,8 @@ object Classifier {
     * is interpreted (HOF) decimal work, so a deployment whose
     * per-doc feature count is high can buy fold parallelism with
     * more (smaller) partitions — the task floor × rounds is the
-    * price, measured in tools/RoundFloor. */
+    * price (r10, recorded in SURVEY.md: fixed 2.57 s + 0.174 s per
+    * round at local[32]). */
   private val RowsPerPartition = 64 * 1024L
 
   private def rowsPerPartition(spark: org.apache.spark.sql.SparkSession): Long =

@@ -545,6 +545,12 @@ object Similarity {
     * a fixed number of scans TOTAL (independent of k), the k-means‖
     * shape (Bahmani et al., VLDB 2012) applied to k-center.
     *
+    * DISPATCH: a call with k > `spark.graft.kcenter.greedyMaxK`
+    * (session conf, default 256) returns [[kcenterSelectParallel]]'s
+    * answer instead of running the greedy loop; same output contract.
+    * A conf value that is not an integer throws
+    * IllegalArgumentException naming the key and the value.
+    *
     * Returns (rank, vec_id, dist): dist = the point's squared-L2
     * distance to the already-selected set at selection time (round 6)
     * — the coverage-radius curve that shows when selection saturates
@@ -560,8 +566,11 @@ object Similarity {
     // bounds measured by KcenterParallelSpec. The ceiling is the
     // batch-budget default from the doc above; production tunes it via
     // spark.graft.kcenter.greedyMaxK.
-    val greedyMaxK = spark.conf.getOption("spark.graft.kcenter.greedyMaxK")
-      .map(_.toInt).getOrElse(256)
+    val key = "spark.graft.kcenter.greedyMaxK"
+    val greedyMaxK = spark.conf.getOption(key).map { v =>
+      v.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
+        s"$key must be an integer, got '$v'"))
+    }.getOrElse(256)
     if (k > greedyMaxK)
       return kcenterSelectParallel(vecs, idCol, vecCol, k)
     import spark.implicits._

@@ -81,8 +81,9 @@ object StreamParity {
     * delta-file write + fsync + commit-validation RPC PER TRIGGER, and
     * on a host with ~4.5 ms small-file fsync (this round's, measured)
     * that fixed cost dominated every parity row — the r13→r14
-    * StreamSplit attribution read noop-machinery 3.2 s, +state@8
-    * = 8.1 s, +state@2 = 3.0 s on identical code. The parity key
+    * attribution read noop-machinery 3.2 s, +state@8 = 8.1 s,
+    * +state@2 = 3.0 s on identical code (the r15 re-measure is in
+    * OPTIMIZATION_r15.md and BENCH_ATTRIB_r15.json). The parity key
     * cardinalities (5 priorities … ~10⁵ counters) all fit 2
     * partitions with room; production streams size this to their own
     * key volume. */
@@ -169,7 +170,15 @@ object StreamParity {
         .outputMode("update").trigger(Trigger.AvailableNow()).start()
       awaitRecorded(q)
     }
-    spark.read.parquet(s"$target/out")
+    // zero committed batches (an empty staged input) leave no sink file
+    // to infer a schema from: fall back to an empty update log
+    val out = s"$target/out"
+    val updates =
+      if (Option(new java.io.File(out).list()).exists(_.exists(_.startsWith("part-"))))
+        spark.read.parquet(out)
+      else spark.emptyDataset(
+        org.apache.spark.sql.Encoders.product[EventStream.HHUpdate]).toDF()
+    updates
       .groupBy(col("bucket"), col("ngram"))
       .agg(max_by(struct(col("occ"), col("docs"), col("deleted")),
         col("seq")).as("f"))

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Deterministic structural cost of a bench row: jobs / stages / tasks
   * and summed executor task time for ONE warm execution. Wall-clock on
@@ -15,13 +14,7 @@ object JobCount {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("job-count", cpus, cpus.toInt)
     val perJob = sys.env.get("SPARK_GRAFT_PER_STAGE").contains("1")
     val jobs = new java.util.concurrent.atomic.AtomicLong()
     val stages = new java.util.concurrent.atomic.AtomicLong()

@@ -58,14 +58,9 @@ object PlanCounts {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.001")
-    // session confs MUST match the PlanShapeSpec gate's session
-    // (GraftSession.local): a threshold mismatch would make this tool
-    // print counts the gate then rejects — notably the 64MB
-    // autoBroadcastJoinThreshold, which flips joins between broadcast
-    // and sort-merge for sides estimated between 10MB and 64MB
-    val spark = graft.GraftSession.local("plan-counts",
-      cores = "4", shufflePartitions = 4)
-    spark.sparkContext.setLogLevel("WARN")
+    // same cores as the PlanShapeSpec gate's session, so the printed
+    // counts are the ones the gate checks
+    val spark = graft.GraftSession.local("plan-counts", "4", 4)
     Gated.foreach { name =>
       val df = resolve(name)(spark, sfDir)
       val p = df.queryExecution.executedPlan.toString

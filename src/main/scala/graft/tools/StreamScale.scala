@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.streaming.StreamTelemetry
 
 /** Streaming-tier scale smoke (r13 verdict task 6): the D rows had
@@ -23,13 +22,7 @@ object StreamScale {
     val factor = sys.env.getOrElse("SPARK_GRAFT_SF1_FACTOR", "3").toInt
     val passes = sys.env.getOrElse("SPARK_GRAFT_SF1_PASSES", "2").toInt.max(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("stream-scale", cpus, cpus.toInt)
 
     graft.ScaleSmoke.synthesize(spark, srcDir, outDir, factor)
 

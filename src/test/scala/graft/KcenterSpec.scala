@@ -138,6 +138,13 @@ class KcenterSpec extends SparkSpec {
       val greedy = Similarity.kcenterSelect(df, "vec_id", "embedding", 2)
         .orderBy("rank").collect().toSeq
       assert(greedy.map(_.getLong(1)) == Seq(1L, 4L), greedy.toString)
+      // a malformed ceiling fails naming the key and the value, not
+      // with a bare NumberFormatException
+      spark.conf.set(key, "25x")
+      val e = intercept[IllegalArgumentException](
+        Similarity.kcenterSelect(df, "vec_id", "embedding", 2))
+      assert(!e.isInstanceOf[NumberFormatException] &&
+        e.getMessage.contains(key) && e.getMessage.contains("25x"), e.getMessage)
     } finally {
       spark.conf.unset(key)
       graft.util.CacheRegistry.releaseAll()

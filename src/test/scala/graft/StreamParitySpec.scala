@@ -29,6 +29,22 @@ class StreamParitySpec extends SparkSpec {
       s"stream=${streamed.take(3)}... batch=${batch.take(3)}...")
   }
 
+  test("D7 parity: an empty staged input commits no batch and yields an empty top-25") {
+    // pre-stage this dir's replay (StreamParity's `stkn_<dir name>`
+    // fixture) as an input with no files: the stream commits zero
+    // batches, so the update-log sink is never written
+    val dir = tempDir("stkn_empty")
+    sources.Tables.documents(spark, sfDir).limit(0)
+      .write.parquet(s"$dir/documents.parquet")
+    val staged = graft.util.Fixtures.dir(
+      s"stkn_${new java.io.File(dir).getName}")
+    java.nio.file.Files.createDirectories(staged.resolve("input"))
+    graft.util.Fixtures.buildOnce(staged)(())
+    val top = StreamParity.streamTopkNgramsParity(spark, dir)
+    assert(top.columns.toSeq == Seq("ngram", "n_occurrences", "n_docs"))
+    assert(top.collect().isEmpty)
+  }
+
   test("D8 parity: streaming decontamination gate lands on the batch contamination check") {
     val streamed = rows(StreamParity.streamContaminationParity(spark, sfDir))
     val batch = rows(TextDemos.contaminationCheck(spark, sfDir))
