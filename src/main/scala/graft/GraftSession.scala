@@ -8,8 +8,23 @@ import org.apache.spark.sql.SparkSession
   * Local runs use `local[N]` with `spark.sql.shuffle.partitions` sized to
   * the core count (not the 200 default); on a real cluster the same confs
   * apply with AQE coalescing post-shuffle partitions at runtime.
+  *
+  * Spark keeps compiled whole-stage and expression classes in one
+  * JVM-wide cache whose size is the static conf
+  * `spark.sql.codegen.cache.maxEntries` (default 100). One run of the
+  * daily roster job generates ~140 distinct classes and one corpus
+  * curation run ~285, so at 100 entries the cache evicts within a run
+  * and every rerun in the same JVM compiles again: 147 Janino compiles
+  * per warm roster run, ~293 per warm curation run
+  * (`CodegenMetrics.METRIC_COMPILATION_TIME` counts). With
+  * [[CodegenCacheEntries]] both working sets stay cached: 0 compiles per
+  * warm roster run, at most 20 per warm curation run (classes whose
+  * code differs per run). A cached class costs a few KB of metaspace.
   */
 object GraftSession {
+
+  /** size of Spark's generated-class cache (see above) */
+  val CodegenCacheEntries = 1024
 
   def local(appName: String = "graft",
             cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
@@ -38,6 +53,7 @@ object GraftSession {
       // as long nanos and convert explicitly (Spark has no ns timestamps)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -13,12 +13,13 @@ import graft.functions.Norm
   * alley degrade, road-only with county/district/org combinations),
   * each candidate clamped (clampQuery) and gated by looksLikeAddress.
   *
-  * Spark-first shape: all variants are staged Column projections (one
-  * regex chain evaluated once per row, whole-stage codegen), emission
-  * is one explode of (candidate, rank) structs, and the reference's
-  * insertion-ordered Set dedup is `groupBy(candidate).min(rank)` — a
-  * map-side-combinable aggregation instead of a per-row O(n²)
-  * first-occurrence scan, so the plan holds at any scale.
+  * Spark-first shape: the input is hash-repartitioned on the id once, up
+  * front; all variants are then staged Column projections (one regex
+  * chain evaluated once per row, whole-stage codegen), emission is one
+  * explode of (candidate, rank) structs, and the reference's
+  * insertion-ordered Set dedup is `groupBy(id, candidate).min(rank)`,
+  * which that id partitioning already satisfies — instead of a per-row
+  * O(n²) first-occurrence scan, so the plan holds at any scale.
   */
 object Geocode {
 
@@ -55,6 +56,13 @@ object Geocode {
     * the reference rungs are no-ops, so its emitted alley candidates
     * can differ from ours (intent preserved: degrade alley detail,
     * keep the house number).
+    *
+    * Plan: one exchange, a hash repartition on `idCol` into
+    * `spark.sql.shuffle.partitions` partitions, below the explode. AQE
+    * never coalesces a repartition with an explicit count, so the regex
+    * ladder runs on every core even when the input is one small file,
+    * and the (id, candidate) dedup reuses the id partitioning: input rows
+    * cross the exchange, not the ~10× larger candidate stream.
     */
   /** `refAlley = true` swaps the corrected alley-degrade rungs for the
     * reference-EXACT ladder: alleyDegradeVariants' verbatim regexes
@@ -81,7 +89,8 @@ object Geocode {
     // -- stage 1: normalize + composite split (geocode.js:197-204) --
     val pre = Norm.stripCountry(Norm.foldTai(Norm.stripSpaces(
       Norm.stripPostal(Norm.stripParens(col(addrCol))))))
-    val s1 = df.select(col(idCol), org, pre.as("_pre"))
+    val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val s1 = df.repartition(parts, col(idCol)).select(col(idCol), org, pre.as("_pre"))
     val head = regexp_extract(col("_pre"), "^[^;；]*", 0)
     val s2 = s1.select(col(idCol), col("_org"), col("_pre"),
       Norm.removeLi(Norm.removeLi(head)).as("_head"))
@@ -117,12 +126,16 @@ object Geocode {
       .withColumn("_b3", Norm.zhStreetNumeralToArabicOrNull(col("_b2")))
 
     // -- stage 3: hyphen variants per base (geocode.js:162-169) --
+    // A variant (hyphen or alley rung) equal to its source is NULL, like
+    // the no-op bases above: every candidate it would emit repeats one of
+    // its source's at a worse rank, so the min-rank dedup drops it anyway.
+    def unlessSame(v: Column, src: Column): Column = when(v =!= src, v)
     val hCols = for (bi <- 0 to 3; hi <- 0 to 2) yield {
       val b = col(s"_b$bi")
       val h = hi match {
         case 0 => b
-        case 1 => Norm.hyphenToZhi(b)
-        case 2 => Norm.hyphenDropSub(b)
+        case 1 => unlessSame(Norm.hyphenToZhi(b), b)
+        case 2 => unlessSame(Norm.hyphenDropSub(b), b)
       }
       h.as(s"_h${bi}$hi")
     }
@@ -153,9 +166,9 @@ object Geocode {
       val secCols = hNames.map(h => Norm.sectionArabic(col(h)).as(s"${h}s"))
       val s6b = s6.select(s6.columns.map(col) ++ secCols: _*)
       val derived = hNames.flatMap { h =>
-        Seq(Norm.dropNong(col(h)).as(s"${h}n"),
-            Norm.dropXiang(col(h)).as(s"${h}x"),
-            Norm.dropXiangNong(col(h)).as(s"${h}z"),
+        Seq(unlessSame(Norm.dropNong(col(h)), col(h)).as(s"${h}n"),
+            unlessSame(Norm.dropXiang(col(h)), col(h)).as(s"${h}x"),
+            unlessSame(Norm.dropXiangNong(col(h)), col(h)).as(s"${h}z"),
             Norm.roadOnlyOfSection(col(s"${h}s")).as(s"${h}r"))
       }
       val s7c = s6b.select(s6b.columns.map(col) ++ derived: _*)
@@ -182,8 +195,8 @@ object Geocode {
       // combo block, mirroring the `for a of alleyDegradeVariants(h)`
       // emission loop exactly (geocode.js:258-274).
       val derived = hNames.flatMap { h =>
-        val forms = Seq(col(h), Norm.refAlleyNong(col(h)),
-          Norm.refAlleyXiang(col(h)), Norm.refAlleyBoth(col(h)))
+        val forms = col(h) +: Seq(Norm.refAlleyNong(col(h)),
+          Norm.refAlleyXiang(col(h)), Norm.refAlleyBoth(col(h))).map(unlessSame(_, col(h)))
         forms.zipWithIndex.flatMap { case (f, ai) =>
           Seq(f.as(s"${h}f$ai"), Norm.roadOnly(f).as(s"${h}r$ai"))
         }
@@ -211,13 +224,12 @@ object Geocode {
     val s8 = s7.select(col(idCol), col("_org"), col("_cty"), col("_dst"),
         col("_segi"),
         posexplode(array(hStructs: _*)).as(Seq("_hi", "_hs")))
-      // a base block whose transform was a no-op carries a NULL base
-      // (see s5) — its candidates are null and the emission gate drops
-      // them (output-invariant: the non-null twin block emits the same
-      // bytes at a better rank). This explicit filter just spares the
-      // 15-slot gate work for those rows.
-      .filter(col("_hi") < 3 || col("_hs").getField(
-        if (refAlley) "f0" else "h").isNotNull)
+      // a block whose base or hyphen transform was a no-op carries a
+      // NULL variant (see s5 and stage 3) — its candidates are null and
+      // the emission gate drops them (output-invariant: the non-null twin
+      // block emits the same bytes at a better rank). This explicit
+      // filter just spares the 15-slot gate work for those rows.
+      .filter(col("_hs").getField(if (refAlley) "f0" else "h").isNotNull)
 
     // clamp + looksLike evaluate INSIDE the emission lambda — one site
     // per candidate. Aliasing the clamped string and filtering later
@@ -259,30 +271,38 @@ object Geocode {
   def resolveAgainstCache(df: DataFrame, idCol: String, addrCol: String,
                           cache: DataFrame, cacheKey: String,
                           payloadCols: Seq[String] = Nil): DataFrame = {
-    val hits = expand(df, idCol, addrCol)
-      .join(cache, col("candidate") === col(cacheKey))
-      .groupBy(col(idCol))
+    val hits = bestHit(expand(df, idCol, addrCol)
+      .join(cache, col("candidate") === col(cacheKey)), idCol, payloadCols)
+    df.join(hits, Seq(idCol), "left")
+  }
+
+  /** per id, the best-ranked of its candidate `hits` (id, rank,
+    * candidate, payload…): `(id, matched_query, payload…)`. */
+  private def bestHit(hits: DataFrame, idCol: String,
+                      payloadCols: Seq[String]): DataFrame =
+    hits.groupBy(col(idCol))
       .agg(min(struct(col("rank") +: col("candidate") +:
         payloadCols.map(col): _*)).as("best"))
       .select(col(idCol) +: col("best.candidate").as("matched_query") +:
         payloadCols.map(c => col(s"best.$c").as(c)): _*)
-    df.join(hits, Seq(idCol), "left")
-  }
 
   /** The reference's incremental daily-geocode loop: every resolve is
     * appended back into the cache as it lands (geocode.js:542-549), so
     * the next day's run geocodes only the delta. Composition of
-    * [[resolveAgainstCache]] with the keyed snapshot sink
+    * [[expand]], a cache lookup and the keyed snapshot sink
     * ([[graft.streaming.EventStream.upsertBatch]]):
     *
-    *  1. today's rows resolve against the latest COMMITTED cache
-    *     snapshot (best-ranked candidate hit, lat/lng carried);
-    *  2. only the unresolved delta expands candidates and goes to
-    *     `resolver` — the external geocoder stage (candidates in:
-    *     `(id, candidate, rank)`; hits out: `(candidate, lat, lng)`;
-    *     wrap the real HTTP call in RateLimited per A14 — specs inject
-    *     a deterministic fake);
-    *  3. fresh hits UPSERT into the cache snapshot under `batchId`
+    *  1. every one of today's rows expands ONCE; that persisted
+    *     candidate frame feeds both the cache lookup and the delta;
+    *  2. candidates resolve against the latest COMMITTED cache
+    *     snapshot (best-ranked candidate hit, lat/lng carried); on the
+    *     first run there is no snapshot and the lookup is skipped;
+    *  3. only the candidates of the unresolved delta go to `resolver`
+    *     — the external geocoder stage (candidates in:
+    *     `(id, candidate, rank)`, exactly [[expand]] of the delta rows;
+    *     hits out: `(candidate, lat, lng)`; wrap the real HTTP call in
+    *     RateLimited per A14 — specs inject a deterministic fake);
+    *  4. fresh hits UPSERT into the cache snapshot under `batchId`
     *     (one id per day), so run N+1's cache holds every hit from
     *     runs 1..N, and a replayed day re-merges idempotently from the
     *     previous snapshot.
@@ -296,51 +316,37 @@ object Geocode {
                    cacheDir: String, batchId: Long)(
                    resolver: DataFrame => DataFrame): DataFrame = {
     import graft.streaming.EventStream
-    val spark = rows.sparkSession
-    val emptyCache = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("query",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("lat",
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("lng",
-          org.apache.spark.sql.types.DoubleType))))
+    val payload = Seq("lat", "lng")
+    val cands = expand(rows, idCol, addrCol)
+    graft.util.CacheRegistry.register(cands.persist()) // every consumer below
     val cache =
-      try EventStream.readLatestState(spark, cacheDir)
-      catch { case _: IllegalArgumentException => emptyCache } // first run
-    val resolved = resolveAgainstCache(rows, idCol, addrCol, cache, "query",
-      Seq("lat", "lng"))
-    val cacheHits = resolved.filter(col("matched_query").isNotNull)
-      .select(col(idCol), col("matched_query"), col("lat"), col("lng"),
-        lit("cache").as("source"))
-    // the delta: ONLY these rows re-expand and reach the resolver
-    val unresolved = rows.join(cacheHits, Seq(idCol), "left_anti")
-    val cands = expand(unresolved, idCol, addrCol)
-    graft.util.CacheRegistry.register(cands.persist()) // two consumers below
+      try Some(EventStream.readLatestState(rows.sparkSession, cacheDir))
+      catch { case _: IllegalArgumentException => None } // first run: no snapshot
+    val cacheHits = cache.map(c =>
+      bestHit(cands.join(c, col("candidate") === col("query")), idCol, payload)
+        .withColumn("source", lit("cache")))
+    // the delta: ONLY these rows' candidates reach the resolver
+    val delta = cacheHits.fold(cands)(h =>
+      cands.join(h.select(col(idCol)), Seq(idCol), "left_anti"))
     // The resolver stage is EXTERNAL work (rate-limited calls, possibly
     // nondeterministic answers): it must execute exactly once, so its
     // output is eagerly localCheckpoint'ed — the cache write-back below
     // and the returned roster both read the SAME materialized answers
     // (an unpersisted plan would re-call the geocoder per action and
     // could write different coordinates than it returns).
-    val fresh = resolver(cands)
+    val fresh = resolver(delta)
       // defensive: one deterministic row per candidate even if the
       // resolver returns several
       .groupBy(col("candidate"))
       .agg(min(struct(col("lat"), col("lng"))).as("_p"))
       .select(col("candidate"), col("_p.lat").as("lat"), col("_p.lng").as("lng"))
       .localCheckpoint(true)
-    val freshBest = cands.join(fresh, Seq("candidate"))
-      .groupBy(col(idCol))
-      .agg(min(struct(col("rank"), col("candidate"), col("lat"), col("lng"))).as("best"))
-      .select(col(idCol), col("best.candidate").as("matched_query"),
-        col("best.lat").as("lat"), col("best.lng").as("lng"),
-        lit("fresh").as("source"))
+    val freshBest = bestHit(delta.join(fresh, Seq("candidate")), idCol, payload)
+      .withColumn("source", lit("fresh"))
     // write-back (geocode.js:542-549): every fresh hit joins the cache
     EventStream.upsertBatch(cacheDir, Seq("query"))(
       fresh.select(col("candidate").as("query"), col("lat"), col("lng")), batchId)
-    rows.join(cacheHits.unionByName(freshBest), Seq(idCol), "left")
+    rows.join(cacheHits.fold(freshBest)(_.unionByName(freshBest)), Seq(idCol), "left")
   }
 
   /** [[dailyGeocode]] with the reference's FINER durability granularity

@@ -327,14 +327,8 @@ object RefDemos {
         .when(k % 8 === 5, concat(lit("，中山北路"), (k % 88 + 1).cast("string"), lit("號")))
         .otherwise(lit("")))
     val orgName = when(k % 3 === 1, lit("仁心診所")).otherwise(lit(""))
-    // the ladder is pure per-row compute; parallelism = input splits.
-    // The demo table is one tiny parquet file (a single split), which
-    // would serialize ~150 regex evals/row onto one core — spread it.
-    // A real deployment's scan has thousands of splits; this repartition
-    // is the small-file stand-in, not part of the operator.
     Tables.customer(spark, dir)
       .select(col("c_custkey"), raw.as("addr"), orgName.as("org"))
-      .repartition(spark.sparkContext.defaultParallelism)
   }
 
   def geocodeCandidates(spark: SparkSession, dir: String): DataFrame =
@@ -345,7 +339,14 @@ object RefDemos {
   /** A15c — street-centroid fallback ladder over the same corpus
     * (buildStreetCentroidCandidates, geocode.js:398-425). */
   def geocodeStreetCentroid(spark: SparkSession, dir: String): DataFrame =
-    Geocode.streetCentroidCandidates(synthAddrCorpus(spark, dir),
+    // the street ladder is pure per-row compute; parallelism = input
+    // splits. The demo table is one tiny parquet file (a single split),
+    // which would serialize the regex work onto one core — spread it. A
+    // real deployment's scan has thousands of splits; this repartition is
+    // the small-file stand-in, not part of the operator. (Geocode.expand
+    // repartitions its input itself.)
+    Geocode.streetCentroidCandidates(
+        synthAddrCorpus(spark, dir).repartition(spark.sparkContext.defaultParallelism),
         "c_custkey", "addr", orgCol = Some("org"))
       .orderBy("c_custkey", "try_order")
 

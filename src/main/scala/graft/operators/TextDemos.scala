@@ -1102,9 +1102,14 @@ object TextDemos {
     * joins key on `ab = xxhash64(a, b)` / `ah = xxhash64(a)` — 8-byte
     * fixed-width keys instead of UTF8 string pairs, so the
     * corpus-scale exchanges hash/compare/sort machine words.
-    * Injective at 2⁻⁶⁴ collision odds on any real vocabulary; the
-    * DuckDB oracle recomputes every consumer row FROM the strings and
-    * still hash-matches (197/197), which is the equivalence proof.
+    * NOT injective: one pair of distinct keys collides at odds 2⁻⁶⁴,
+    * so over N distinct bigram (or unigram) types the chance of any
+    * collision is the birthday bound ~N²/2⁶⁵ — ~3·10⁻⁴ at 10⁸ types,
+    * ~3% at 10⁹, near-certain at the ceiling of ~10¹⁰ distinct bigrams,
+    * which a 100 TB corpus can reach. A collision silently merges two
+    * types' counts and skews `_lp`. The DuckDB oracle recomputes every
+    * consumer row FROM the strings and still hash-matches (197/197):
+    * no collision on the test corpora, not a proof for larger ones.
     *
     * `carryTokens=false` (the per-doc score consumers, which never
     * look at the tokens again): the strings are hashed in the explode

@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 
 /** Deterministic structural cost of a bench row: jobs / stages / tasks
@@ -7,7 +8,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * a contended host is additive-noisy; the scheduler event counts are
   * exactly reproducible for a fixed plan, so a structural optimization
   * (an exchange removed, a per-round join dropped) shows up here even
-  * when the wall numbers are drowned. Run:
+  * when the wall numbers are drowned. `codegen_compiles` counts the
+  * Janino compiles of the warm execution: 0 when every generated class
+  * is still cached from the first one. Run:
   * `sbt "runMain graft.tools.JobCount <row> [row ...]"` with the usual
   * SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS env. One JSON line per row. */
 object JobCount {
@@ -48,12 +51,14 @@ object JobCount {
       graft.util.CacheRegistry.releaseAll()
       Thread.sleep(400) // listener bus drains asynchronously
       jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0); shufWrite.set(0)
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       graft.util.CacheRegistry.releaseAll()
       Thread.sleep(400) // listener bus drains asynchronously
-      println(f"""{"row":"$name","jobs":${jobs.get},"stages":${stages.get},"tasks":${tasks.get},"task_sec":${taskMs.get / 1e3}%.2f,"shuffle_write_mb":${shufWrite.get / 1e6}%.2f,"wall_sec":$wall%.2f}""")
+      println(f"""{"row":"$name","jobs":${jobs.get},"stages":${stages.get},"tasks":${tasks.get},"task_sec":${taskMs.get / 1e3}%.2f,"shuffle_write_mb":${shufWrite.get / 1e6}%.2f,"wall_sec":$wall%.2f,"codegen_compiles":$compiles}""")
     }
     graft.util.Fixtures.sweep(spark)
     spark.stop()

@@ -16,10 +16,13 @@ class GeocodeDailySpec extends SparkSpec {
 
   // deterministic fake external geocoder: resolves any candidate that
   // carries a house number, at hash-derived coordinates — and records
-  // which row ids reached it (the delta-only assertion)
-  private def fakeResolver(seen: scala.collection.mutable.Set[Long])(
+  // which row ids reached it (the delta-only assertion), and, when asked,
+  // the candidate rows themselves
+  private def fakeResolver(seen: scala.collection.mutable.Set[Long],
+      got: scala.collection.mutable.Set[(Long, String, Int)] = scala.collection.mutable.Set.empty)(
       cands: DataFrame): DataFrame = {
     seen ++= cands.select(col("id")).distinct().as[Long].collect()
+    got ++= cands.select(col("id"), col("candidate"), col("rank")).as[(Long, String, Int)].collect()
     cands.filter(col("candidate").rlike("\\d+號$"))
       .select(col("candidate"),
         (lit(22.0) + pmod(xxhash64(col("candidate")), lit(1000)).cast("double") / 1000.0).as("lat"),
@@ -47,10 +50,16 @@ class GeocodeDailySpec extends SparkSpec {
       (1L, "台北市大安區和平東路12巷34號"),
       (3L, "臺南市安平區育平路77號")).toDF("id", "addr")
     val seen2 = scala.collection.mutable.Set.empty[Long]
-    val out2 = Geocode.dailyGeocode(day2, "id", "addr", dir, 1L)(fakeResolver(seen2))
+    val got2 = scala.collection.mutable.Set.empty[(Long, String, Int)]
+    val out2 = Geocode.dailyGeocode(day2, "id", "addr", dir, 1L)(fakeResolver(seen2, got2))
       .select(col("id"), col("source"), col("lat"), col("lng"))
       .collect().map(r => r.getLong(0) -> (r.getString(1), r.getDouble(2), r.getDouble(3))).toMap
     assert(seen2 == Set(3L), "second run: only the new row reaches the resolver")
+    // and it receives exactly the uncached row's ladder, ranks included
+    val uncached = Geocode.expand(day2.filter(col("id") === 3L), "id", "addr")
+      .select(col("id"), col("candidate"), col("rank")).as[(Long, String, Int)].collect().toSet
+    assert(uncached.nonEmpty && got2 == uncached,
+      s"resolver got ${got2.size} candidates, expand of the delta has ${uncached.size}")
     assert(out2(1L)._1 == "cache", "recurring row served from the cache")
     assert(out2(3L)._1 == "fresh")
     // the cached coordinates are exactly what day 1 resolved

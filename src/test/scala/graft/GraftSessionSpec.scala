@@ -2,7 +2,9 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.functions.{col, lit}
 
 /** One session factory: every entry point builds its session through
   * [[GraftSession.local]], so mains, specs and the benchmark plan with
@@ -30,7 +32,26 @@ class GraftSessionSpec extends SparkSpec {
     assert(s.conf.get("spark.sql.adaptive.enabled") == "true")
     assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(s.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      GraftSession.CodegenCacheEntries.toString)
     assert(s.sessionState.functionRegistry.functionExists(FunctionIdentifier("graft_dot")),
       "GraftExtensions not installed")
+  }
+
+  test("a rerun of more generated classes than Spark's default cache holds compiles nothing") {
+    // Spark's default cache keeps 100 classes; 150 distinct projections
+    // evict each other there and every one recompiles on the second pass
+    val n = 150
+    assert(n > 100 && n < GraftSession.CodegenCacheEntries)
+    def pass(): Unit = (0 until n).foreach { i =>
+      spark.range(2).select((col("id") * lit(7919L) + lit(i.toLong)).as("v")).collect()
+    }
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val c0 = compiles
+    pass()
+    val c1 = compiles
+    assert(c1 - c0 >= n, s"the first pass must generate $n classes, compiled ${c1 - c0}")
+    pass()
+    assert(compiles - c1 == 0, s"the second pass recompiled ${compiles - c1} classes")
   }
 }

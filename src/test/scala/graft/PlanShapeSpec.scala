@@ -1,6 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{Exchange, REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import graft.operators.{Curation, Packing, Similarity}
 
@@ -29,6 +34,32 @@ class PlanShapeSpec extends SparkSpec {
   private val vecs = Seq(
     (1L, Seq(1.0f, 2.0f, 3.0f, 4.0f)), (2L, Seq(0.0f, 0.0f, 0.0f, 0.0f))
   ).toDF("vec_id", "embedding").repartition(4)
+
+  test("geocode expand shuffles once: a fixed-count hash repartition on the id below the explode") {
+    // one partition in: only a repartition with an explicit count (which
+    // AQE never coalesces) spreads the ladder over more than the input's
+    // one task; the (id, candidate) dedup then reuses it
+    val rows = Seq((1L, "台北市大安區和平東路12巷3-1號"), (2L, "高雄市左營區中山路5號"))
+      .toDF("id", "addr").coalesce(1)
+    val df = graft.operators.Geocode.expand(rows, "id", "addr")
+    val p = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case other => other
+    }
+    val ex = p.collect { case e: Exchange => e } match {
+      case Seq(e: ShuffleExchangeExec) => e
+      case other => fail(s"expected exactly one shuffle exchange, got ${other.size}\n$p")
+    }
+    assert(ex.shuffleOrigin == REPARTITION_BY_NUM, p)
+    ex.outputPartitioning match {
+      case HashPartitioning(Seq(a: Attribute), n) =>
+        assert(a.name == "id" && n == spark.conf.get("spark.sql.shuffle.partitions").toInt, p)
+      case other => fail(s"expected a hash repartition on id, got $other\n$p")
+    }
+    val generates = p.collect { case g: GenerateExec => g }
+    assert(generates.nonEmpty && generates.forall(_.find(_ eq ex).isDefined),
+      s"the exchange must sit below every explode\n$p")
+  }
 
   test("chunk_overlap is map-only: adds zero exchanges over its input") {
     val df = Packing.chunkOverlap(docs, "doc_id", "text", size = 4, stride = 3)
