@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.util.Iterative
 
 /** Deduplication operators.
   *
@@ -302,69 +303,66 @@ object Dedup {
     * neighbor's label didn't change, its contribution was already
     * received), so per-round join input shrinks as components converge.
     * Convergence detection rides the checkpoint job via `observe`
-    * (no second action per round). */
+    * (no second action per round). The edge leaves and every round but
+    * the last are released before returning; the result reads the last
+    * round's checkpoint. */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
                           idCol: String, aCol: String = "id_a", bCol: String = "id_b",
                           maxIter: Int = 20): DataFrame = {
     val spark = nodes.sparkSession
-    // Two-phase edge cache (r16). Phase 1 lands the doubled edge list
-    // once at its natural layout; the SAME job that initializes the
-    // labels observes the edge count. Phase 2 re-partitions the cached
-    // edges by dst into a LOOP-SIZED partition count derived from that
-    // count (guide §2.2: the per-round exchanges carry 16-byte rows,
-    // so the session's corpus-sized shuffle setting over-partitions
-    // them; [[graft.util.Iterative.partitionsFor]] is scale-adaptive —
-    // 1 partition at fixture scale, thousands at 10¹⁰ edges). The
-    // per-round message join probes edges on dst, so the dst layout
-    // pinned INSIDE the cache (r15) lets every round co-partition
-    // against it: only the (node-scale) frontier side exchanges per
-    // round, and the edge table never re-shuffles after phase 2.
-    val edges0 = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .persist()
-    // every node's initial label counts as "changed": round 1 messages
-    // flow from everyone
-    val obs0 = org.apache.spark.sql.Observation("cc_edges")
-    var labels = edges0.observe(obs0, count(lit(1)).as("n_edges"))
-      .select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label"), lit(true).as("_chg"))
-      .localCheckpoint(true)
-    val nEdges = Option(obs0.get("n_edges")).map(_.asInstanceOf[Long]).getOrElse(0L)
-    val npart = graft.util.Iterative.partitionsFor(spark, nEdges)
-    val edges = edges0.repartition(npart, col("dst")).persist()
-    edges.count() // materialize from the phase-1 cache, then drop it
-    edges0.unpersist()
-    var changed = 1L
-    var i = 0
+    // Two-phase edge leaf. Phase 1 checkpoints the doubled edge list
+    // and observes its count in the same job; phase 2 re-partitions it
+    // by dst into a LOOP-SIZED partition count derived from that count
+    // (guide §2.2: the per-round exchanges carry 16-byte rows;
+    // [[graft.util.Iterative.partitionsFor]] gives 1 partition at
+    // fixture scale, thousands at 10¹⁰ edges). The message join probes
+    // edges on dst, and the phase-2 leaf keeps hashpartitioning(dst,
+    // npart): the edge table never re-shuffles, and every round reads
+    // leaves only.
+    val (edges0, Seq(nEdges)) = Iterative.leaf(
+      pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+        .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst"))))
+    val npart = Iterative.partitionsFor(spark, nEdges)
     // AQE off for the rounds: the loop's plan shape never changes, so
     // adaptive stage re-planning only multiplies the per-round job
     // count (the pageRank/classifier loop discipline) — and AQE's
     // runtime coalescing would break the npart co-partitioning with
-    // the cached dst layout.
-    graft.util.Iterative.withLoopConf(spark, npart) {
+    // the dst-partitioned edge leaf.
+    val converged = Iterative.withLoopConf(spark, npart) {
+      val edges = Iterative.leaf(edges0.repartition(npart, col("dst")))._1
+      Iterative.release(edges0)
+      // every endpoint's initial label counts as "changed": round 1
+      // messages flow from everyone (the edge list is symmetric, so
+      // its dst set is its endpoint set, already in the dst layout)
+      var labels = Iterative.leaf(edges.select(col("dst").as("id")).distinct()
+        .select(col("id"), col("id").as("label"), lit(true).as("_chg")))._1
+      var changed = 1L
+      var i = 0
       while (changed > 0 && i < maxIter) {
         val frontier = labels.filter(col("_chg"))
           .select(col("id").as("_fid"), col("label").as("_flabel"))
-        val msgMin = edges.join(frontier, edges("dst") === col("_fid"))
+        val msgMin = edges.join(frontier.hint(Iterative.ShuffleHash), edges("dst") === col("_fid"))
           .select(edges("src").as("id"), col("_flabel").as("_m"))
           .groupBy("id").agg(min(col("_m")).as("_m"))
-        val obs = org.apache.spark.sql.Observation(s"cc_round_$i")
-        val next = labels.select(col("id"), col("label"))
-          .join(msgMin, Seq("id"), "left")
-          .select(col("id"),
-            least(col("label"), coalesce(col("_m"), col("label"))).as("label"),
-            (coalesce(col("_m"), col("label")) < col("label")).as("_chg"))
-          .observe(obs, sum(col("_chg").cast("long")).as("n_changed"))
-          .localCheckpoint(true) // eager: the observed metric is final here
-        changed = Option(obs.get("n_changed")).map(_.asInstanceOf[Long]).getOrElse(0L)
+        // convergence rides the round's checkpoint job: no second action
+        val (next, Seq(_, nChanged)) = Iterative.leaf(
+          labels.select(col("id"), col("label"))
+            .join(msgMin.hint(Iterative.ShuffleHash), Seq("id"), "left")
+            .select(col("id"),
+              least(col("label"), coalesce(col("_m"), col("label"))).as("label"),
+              (coalesce(col("_m"), col("label")) < col("label")).as("_chg")),
+          sum(col("_chg").cast("long")))
+        Iterative.release(labels)
         labels = next
+        changed = nChanged
         i += 1
       }
+      Iterative.release(edges)
+      labels
     }
-    edges.unpersist()
     // the edgeless majority self-labels outside the loop
     nodes.select(col(idCol))
-      .join(labels.withColumnRenamed("id", idCol), Seq(idCol), "left")
+      .join(converged.withColumnRenamed("id", idCol), Seq(idCol), "left")
       .select(col(idCol), coalesce(col("label"), col(idCol)).as("cluster"))
   }
 

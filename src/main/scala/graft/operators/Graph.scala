@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.util.Iterative
 
 /** Graph centrality for corpus curation.
   *
@@ -21,25 +22,18 @@ object Graph {
     *
     * Two design decisions carry this to 100 TB:
     *
-    *  1. **One scheduled job per round, AQE off, loop-sized
-    *     partitions.** The iteration count is fixed up front (the
-    *     standard production form), and each round costs exactly one
-    *     driver round-trip: the dangling-mass scalar — one row that a
-    *     broadcast formulation would collect to the driver anyway,
-    *     as a BroadcastExchange build job plus a join per round
-    *     (r16: measured 58 jobs / 835 tasks for 6 rounds under AQE
-    *     vs 12 / 284 after). The rest of the recurrence stays lazy:
-    *     rank_i joins edges, aggregates, and feeds rank_{i+1}, with
-    *     AQE disabled for the loop (a fixed per-round plan gains
-    *     nothing from adaptive stage re-planning — it only multiplies
-    *     the job count) and shuffle partitions derived from the node
-    *     count ([[graft.util.Iterative]]). Each round's rank table
-    *     takes a LAZY localCheckpoint: it feeds two consumers in
-    *     round i+1 (contributions and dangling mass), so a plain plan
-    *     would double per round — 2^iters copies of the upstream
-    *     lineage at analysis time — while the checkpoint truncates
-    *     the logical plan and the underlying RDD DAG shares rounds by
-    *     reference.
+    *  1. **One query and one action per round, over plan leaves.**
+    *     The iteration count is fixed up front (the standard production
+    *     form). The src-partitioned edges (out-degrees attached) and the
+    *     node set (its `_dng` flag marks no out-edge) are eager
+    *     [[graft.util.Iterative.leaf]] checkpoints, so no round re-walks
+    *     the caller's lineage. Each round's ranks are a leaf too, and the
+    *     NEXT round's dangling mass (Σ r over `_dng` nodes) is observed
+    *     in that checkpoint's job: 1 job per round, where a separate
+    *     dangling-mass `first()` made it 3 (`GraphSpec` pins it). AQE is
+    *     off and partitions are sized from the observed EDGE count
+    *     ([[graft.util.Iterative]]); ranks and edges share that hash
+    *     layout, so a round shuffles only its contributions.
     *
     *  2. **Scaled-integer ranks (`scale` = 10^15), not doubles.**
     *     Float PageRank ties the result to an unguaranteed summation
@@ -57,11 +51,11 @@ object Graph {
     * where dangling = Σ r(u) over nodes with no out-edges (their mass
     * redistributes uniformly — the standard dangling-node treatment).
     *
-    * Shuffle shape: edges persist once with out-degrees attached
-    * (8-byte ids — document text never moves); each round shuffles
-    * (id, long) pairs on the node key, map-side combinable. At 100 TB
-    * pre-partition `edges` by src so every round's join is
-    * co-partitioned.
+    * Shuffle shape: 8-byte ids only (document text never moves); each
+    * round shuffles (id, long) contributions on the node key,
+    * map-side combinable. The leaves and every round but the last are
+    * released before returning; the result reads the last round's
+    * checkpoint.
     *
     * `edges` must be DIRECTED (src, dst) — pass both directions for an
     * undirected graph. `nodes` fixes the vertex set (isolated nodes
@@ -74,61 +68,46 @@ object Graph {
     require(dampNum >= 0 && dampNum <= dampDen,
       s"damping $dampNum/$dampDen out of [0, 1]")
     val spark = nodes0.sparkSession
-    val nodes = graft.util.CacheRegistry.register(
-      nodes0.select(col(idCol).as("id")).persist())
-    val n = nodes.count()
-    require(n > 0, "pageRank needs a non-empty node set")
-    // loop exchanges carry node-scale (id, long) rows: size them from
-    // the node count, not the session's corpus-sized shuffle setting,
-    // and plan every round with AQE OFF — the round's plan is fixed,
-    // so adaptive re-planning only multiplies the job count (measured
-    // on the C68 row: 58 jobs / 835 tasks under AQE for 6 rounds).
-    val npart = graft.util.Iterative.partitionsFor(spark, n)
-    val eo = edgesWithOutdeg(edges, srcCol, dstCol, npart)
-    val odegOnly = eo.select(col("src")).distinct()
-    var r = nodes.withColumn("r", lit(scale / n))
-    graft.util.Iterative.withLoopConf(spark, npart) {
+    val (ed, Seq(nEdges)) = Iterative.leaf(
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
+    val npart = Iterative.partitionsFor(spark, nEdges)
+    val ranks = Iterative.withLoopConf(spark, npart) {
+      val eo = Iterative.leaf(edgesWithOutdeg(ed, npart))._1
+      Iterative.release(ed)
+      val (nodes, Seq(n, nDang)) = Iterative.leaf(
+        nodes0.select(col(idCol)).withColumnRenamed(idCol, "id").repartition(npart, col("id"))
+          .join(eo.select(col("src").as("id"), lit(false).as("_dng")).distinct()
+            .hint(Iterative.ShuffleHash), Seq("id"), "left")
+          .select(col("id"), coalesce(col("_dng"), lit(true)).as("_dng")),
+        sum(col("_dng").cast("long")))
+      require(n > 0, "pageRank needs a non-empty node set")
+      var r = nodes.withColumn("r", lit(scale / n))
+      var dang = nDang * (scale / n)
       for (_ <- 1 to iters) {
-        // rank lineage contains the edge table after round 1 — alias
-        // both sides so the re-join's attributes stay unambiguous
-        val contrib = r.as("rr").join(eo.as("ee"), col("rr.id") === col("ee.src"))
+        // alias both sides so the re-join's attributes stay unambiguous;
+        // shuffle-hash joins over the shared layout (Iterative.ShuffleHash)
+        val contrib = r.hint(Iterative.ShuffleHash).as("rr")
+          .join(eo.as("ee"), col("rr.id") === col("ee.src"))
           .select(col("ee.dst").as("id"), expr("rr.r DIV ee.outdeg").as("c"))
           .groupBy("id").agg(sum(col("c")).as("contrib"))
-        // dangling mass as a DRIVER SCALAR (r16): the old one-row
-        // crossJoin paid a BroadcastExchange build job per round — a
-        // job that collects the very same single row to the driver
-        // before re-shipping it. Collecting it directly removes one
-        // join and one broadcast build from every round (measured:
-        // ~5 → ≤2 jobs/round); the value is a sum of longs, so it is
-        // bit-identical however it arrives. This per-round action also
-        // materializes r_{i-1}'s lazy checkpoint, exactly as the
-        // broadcast build did.
-        val dang = r.as("rr")
-          .join(odegOnly.as("oo"), col("rr.id") === col("oo.src"), "left_anti")
-          .agg(coalesce(sum(col("r")), lit(0L)).as("dang"))
-          .first().getLong(0)
-        val dangDivN = dang / n // longs ≥ 0: same floor as SQL DIV
-        // LAZY localCheckpoint, not persist: rank_{i-1} appears twice in
-        // rank_i's plan, so a pure-persist formulation doubles the
-        // LOGICAL plan per round (2^iters copies of the upstream
-        // lineage — analysis and plan rendering blow up long before
-        // execution). localCheckpoint truncates the logical plan to the
-        // round's RDD; the RDD DAG underneath is shared by reference
-        // (a DAG, not a tree) and eager=false keeps the rest of the
-        // recurrence lazy. The physical plan of each round is fixed
-        // HERE (toRdd inside the loop scope), so the AQE-off / npart
-        // overrides bind to every round even though the non-scalar
-        // work executes at the caller's action.
-        r = nodes
-          .join(contrib, Seq("id"), "left")
-          .select(col("id"), expr(
-            s"(${(dampDen - dampNum) * scale} DIV $n + $dampNum * " +
-              s"(coalesce(contrib, CAST(0 AS BIGINT)) + $dangDivN)) DIV $dampDen")
-            .as("r"))
-          .localCheckpoint(false)
+        // dang / n: longs ≥ 0, the same floor as SQL DIV
+        val (next, Seq(_, nextDang)) = Iterative.leaf(
+          r.select(col("id"), col("_dng"))
+            .join(contrib.hint(Iterative.ShuffleHash), Seq("id"), "left")
+            .select(col("id"), col("_dng"), expr(
+              s"(${(dampDen - dampNum) * scale} DIV $n + $dampNum * " +
+                s"(coalesce(contrib, CAST(0 AS BIGINT)) + ${dang / n})) DIV $dampDen")
+              .as("r")),
+          sum(when(col("_dng"), col("r"))))
+        Iterative.release(r) // round 1's r projects the node leaf: a no-op
+        r = next
+        dang = nextDang
       }
+      Iterative.release(eo)
+      Iterative.release(nodes)
+      r
     }
-    r.select(col("id"), col("r").as("rank_e15"),
+    ranks.select(col("id"), col("r").as("rank_e15"),
       (col("r").cast("double") / lit(scale.toDouble)).as("rank"))
   }
 
@@ -151,60 +130,53 @@ object Graph {
     * verbatim by the oracle's N unrolled CTEs.
     *
     * Shuffle shape per round: labels (8-byte pairs) join the
-    * src-partitioned edge cache (the [[edgesWithOutdeg]] layout
+    * src-partitioned edge leaf (the [[edgesWithOutdeg]] layout
     * discipline) — the edge table never re-shuffles — then ONE
-    * map-side-combinable count per (dst,
-    * label) and one argmax fold per dst; node-scale exchanges only,
-    * the [[pageRank]] discipline (localCheckpoint per round cuts the
-    * doubling lineage). Returns (id, community). */
+    * map-side-combinable count per (dst, label) and one argmax fold
+    * per dst; node-scale exchanges only. The [[pageRank]] discipline:
+    * each round is one eager checkpoint of a plan over leaves only, and
+    * the leaves and every round but the last are released before
+    * returning. Returns (id, community). */
   def labelPropagation(nodes0: DataFrame, edges: DataFrame, idCol: String,
                        srcCol: String = "src", dstCol: String = "dst",
                        iters: Int = 4): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val spark = nodes0.sparkSession
-    val nodes = graft.util.CacheRegistry.register(
-      nodes0.select(col(idCol).as("id")).persist())
-    // node-count-derived loop parallelism + AQE off per round — the
-    // [[pageRank]] discipline (see there for the measured rationale)
-    val n = nodes.count()
-    val npart = graft.util.Iterative.partitionsFor(spark, n)
-    val ed = graft.util.CacheRegistry.register(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .repartition(npart, col("src")).persist())
-    var lab = nodes.select(col("id"), col("id").as("lab"))
-    graft.util.Iterative.withLoopConf(spark, npart) {
+    // the [[pageRank]] discipline: edge-count-sized loop partitions,
+    // AQE off, and every round planned against checkpointed leaves
+    val (ed0, Seq(nEdges)) = Iterative.leaf(
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
+    val npart = Iterative.partitionsFor(spark, nEdges)
+    val labels = Iterative.withLoopConf(spark, npart) {
+      val ed = Iterative.leaf(ed0.repartition(npart, col("src")))._1
+      Iterative.release(ed0)
+      var lab = Iterative.leaf(nodes0.select(col(idCol)).withColumnRenamed(idCol, "id")
+        .withColumn("lab", col("id")).repartition(npart, col("id")))._1
       for (_ <- 1 to iters) {
-        val winner = lab.as("ll").join(ed.as("ee"), col("ll.id") === col("ee.src"))
+        val winner = lab.hint(Iterative.ShuffleHash).as("ll")
+          .join(ed.as("ee"), col("ll.id") === col("ee.src"))
           .groupBy(col("ee.dst").as("id"), col("ll.lab").as("lab"))
           .agg(count(lit(1)).as("c"))
           .groupBy(col("id"))
           .agg(min(struct((-col("c")).as("nc"), col("lab").as("lab"))).as("best"))
           .select(col("id"), col("best.lab").as("w"))
-        lab = lab.join(winner, Seq("id"), "left")
-          .select(col("id"), coalesce(col("w"), col("lab")).as("lab"))
-          .localCheckpoint(false)
+        val next = Iterative.leaf(lab.join(winner.hint(Iterative.ShuffleHash), Seq("id"), "left")
+          .select(col("id"), coalesce(col("w"), col("lab")).as("lab")))._1
+        Iterative.release(lab)
+        lab = next
       }
+      Iterative.release(ed)
+      lab
     }
-    lab.select(col("id"), col("lab").as("community"))
+    labels.select(col("id"), col("lab").as("community"))
   }
 
-  /** Edges with out-degree attached, persisted once and reused every
-    * round — PRE-PARTITIONED by src (r14 verdict task 6): the
-    * rank×edge join is the per-round heavy exchange, and an explicit
-    * repartition(src) pinned INTO the cache survives
-    * InMemoryTableScan's outputPartitioning, so every round's join
-    * reuses the cached layout instead of re-shuffling the edge table
-    * (AQE may otherwise broadcast odeg and leave the cache partitioned
-    * by whatever the scan produced). The recurring shuffles left are
-    * node-scale: the contrib aggregation on dst, and the rank side of
-    * the join — this makes the "at 100 TB pre-partition edges by src"
-    * note above the implemented default, pinned by PlanShapeSpec. */
-  private[graft] def edgesWithOutdeg(edges: DataFrame, srcCol: String,
-                                     dstCol: String, npart: Int = 0): DataFrame = {
-    val ed = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+  /** Edges (src, dst) with out-degree attached, repartitioned by src
+    * into `npart` partitions: as a [[graft.util.Iterative.leaf]] it
+    * keeps that layout, so every round's rank × edge join reuses it
+    * instead of re-shuffling the edges (pinned by PlanShapeSpec). */
+  private[graft] def edgesWithOutdeg(ed: DataFrame, npart: Int): DataFrame = {
     val odeg = ed.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val re = if (npart > 0) ed.join(odeg, "src").repartition(npart, col("src"))
-             else ed.join(odeg, "src").repartition(col("src"))
-    graft.util.CacheRegistry.register(re.persist())
+    ed.join(odeg, "src").repartition(npart, col("src"))
   }
 }

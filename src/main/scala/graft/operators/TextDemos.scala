@@ -1379,8 +1379,8 @@ object TextDemos {
   /** C68 — PageRank centrality over the C46 mutual-kNN document graph
     * (the in-corpus analog of CCNet-class link-centrality source
     * weighting): undirected edges walked both ways, 6 fixed rounds of
-    * [[Graph.pageRank]]'s exact scaled-integer recurrence — one lazy
-    * DAG, no per-round driver barrier. Hubs score high (corpus-
+    * [[Graph.pageRank]]'s exact scaled-integer recurrence — one
+    * checkpoint job per round. Hubs score high (corpus-
     * representative), isolated vectors keep only teleport mass. */
   def pagerankCentrality(spark: SparkSession, dir: String): DataFrame =
     pagerankOverKnn(spark, dir, iters = 6).orderBy("id")

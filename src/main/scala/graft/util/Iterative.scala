@@ -1,6 +1,8 @@
 package graft.util
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{coalesce, count, lit}
 
 /** Shared discipline for iterative driver loops (PageRank, label
   * propagation, connected components, logreg training): run the loop
@@ -29,8 +31,19 @@ import org.apache.spark.sql.SparkSession
   * SESSION-SCOPED, by construction: the overrides are visible to any
   * other query planned on the same SparkSession while the body runs —
   * fine for single-query drivers (Verify/Bench); a multi-tenant
-  * service should isolate the loop on `spark.newSession()`. Both confs
-  * restore on exit. */
+  * service should isolate the loop on `spark.newSession()`. The confs
+  * restore on exit.
+  *
+  * Why plan leaves ([[leaf]]): a loop input read through `persist()`
+  * drags its cached lineage into every round's plan, and the driver
+  * re-analyses, re-matches and re-prints it each round — on the corpus
+  * benchmark's PageRank that cost more than the rounds' jobs. An eager
+  * `localCheckpoint` leaves a `LogicalRDD` with no lineage that keeps
+  * its physical layout (a `repartition(n, k)` leaf still reports
+  * `hashpartitioning(k, n)`). The trade: its blocks die with their
+  * executor, so a lost executor fails the loop instead of recomputing
+  * — as the per-round checkpoints already accept. Loops [[release]]
+  * every leaf but the one their result reads. */
 object Iterative {
 
   val RowsPerPartitionKey = "spark.graft.loop.rowsPerPartition"
@@ -44,20 +57,49 @@ object Iterative {
     (((rows.max(0L) + per - 1) / per).max(1L)).min(Int.MaxValue.toLong).toInt
   }
 
-  /** run `body` with AQE off (one action = one scheduled job, not one
-    * job per materialized stage) and `spark.sql.shuffle.partitions`
-    * pinned to `npart`. Both confs restore on exit. */
-  def withLoopConf[A](spark: SparkSession, npart: Int)(body: => A): A = {
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val shufKey = "spark.sql.shuffle.partitions"
-    val aqeWas = spark.conf.getOption(aqeKey)
-    val shufWas = spark.conf.getOption(shufKey)
-    spark.conf.set(aqeKey, "false")
-    spark.conf.set(shufKey, npart.toString)
-    try body
-    finally {
-      aqeWas.fold(spark.conf.unset(aqeKey))(spark.conf.set(aqeKey, _))
-      shufWas.fold(spark.conf.unset(shufKey))(spark.conf.set(shufKey, _))
+  /** join hint for a round's build side. A leaf's size estimate is its
+    * origin plan's, so a small loop would broadcast a leaf (the edges
+    * too) every round, one build job each; a shuffle-hash join reads
+    * the co-partitioned leaves with no build job, exchange or sort. */
+  val ShuffleHash = "shuffle_hash"
+
+  /** `df` as an eager localCheckpoint — a plan leaf — with its row
+    * count and each `metrics` aggregate as a long (null reads 0), all
+    * observed in the checkpoint's own job. Returns the leaf and
+    * `count +: metrics`. The leaf's partitioning names the OPTIMIZED
+    * plan's attributes, and a same-name alias (`col("id").as("id")`) is
+    * optimized away, losing it: rename with `withColumnRenamed`. */
+  def leaf(df: DataFrame, metrics: Column*): (DataFrame, IndexedSeq[Long]) = {
+    val obs = Observation()
+    val named = (count(lit(1)) +: metrics).zipWithIndex.map { case (m, i) =>
+      coalesce(m.cast("long"), lit(0L)).as(s"m$i")
     }
+    val cp = df.observe(obs, named.head, named.tail: _*).localCheckpoint(true)
+    val got = obs.get
+    (cp, named.indices.map(i => got(s"m$i").asInstanceOf[Long]))
+  }
+
+  /** drop a [[leaf]]'s checkpointed blocks (non-blocking). Only for a
+    * leaf nothing still reads: its blocks are its only copy. */
+  def release(leaf: DataFrame): Unit = leaf.queryExecution.logical match {
+    case l: LogicalRDD => l.rdd.unpersist(blocking = false)
+    case _ => ()
+  }
+
+  /** run `body` with AQE off (one action = one scheduled job, not one
+    * job per materialized stage), `spark.sql.shuffle.partitions` pinned
+    * to `npart`, and constraint propagation off: a [[leaf]] keeps its
+    * origin plan's constraints, so the optimizer would otherwise re-infer
+    * the caller's predicates as filters in every round's plan. All three
+    * confs restore on exit. */
+  def withLoopConf[A](spark: SparkSession, npart: Int)(body: => A): A = {
+    val loop = Seq(
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> npart.toString,
+      "spark.sql.constraintPropagation.enabled" -> "false")
+    val was = loop.map { case (k, _) => k -> spark.conf.getOption(k) }
+    loop.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally was.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 }

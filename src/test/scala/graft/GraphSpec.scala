@@ -66,6 +66,22 @@ class GraphSpec extends SparkSpec {
       "an isolated node and a spoke receive identical (teleport+dangling) mass here")
   }
 
+  test("pageRank: no first() job, at most 2 more jobs per extra round") {
+    // the dangling mass is observed on each round's checkpoint; a
+    // separate dangling-mass query per round would show up as a
+    // `first` job and as a third job per round
+    val edges = (0L until 60L).map(i => (i, (i * 7 + 3) % 60)) ++
+      (0L until 30L).map(i => (i, (i * 13 + 1) % 60))
+    def jobs(iters: Int): Seq[Seq[String]] = LoopProbe.record(spark) {
+      Graph.pageRank((0L until 64L).toDF("id"), edges.toDF("src", "dst"), "id", iters = iters)
+    }._2.jobs
+    jobs(2) // warm-up: the first call compiles
+    val (j2, j4) = (jobs(2), jobs(4))
+    val firsts = (j2 ++ j4).flatten.filter(_.startsWith("first at"))
+    assert(firsts.isEmpty, s"dangling-mass first() jobs: $firsts")
+    assert(j4.size - j2.size <= 4, s"${j2.size} jobs at 2 rounds, ${j4.size} at 4")
+  }
+
   test("C75 centrality gate: per-source bar and keep set recompute from driver math") {
     val kept = TextDemos.centralityGate(spark, sfDir)
       .select("doc_id", "source", "centrality", "threshold")

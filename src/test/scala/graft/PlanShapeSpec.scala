@@ -282,88 +282,101 @@ class PlanShapeSpec extends SparkSpec {
     assert(exchanges(df) == exchanges(hashes) + 1, p) // the single buffer exchange
   }
 
-  test("pagerank: edges-with-outdegree persist once; a round adds no cartesian join") {
-    val nodes = Seq(1L, 2L, 3L, 4L).toDF("id").repartition(4)
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst").repartition(4)
-    val df = graft.operators.Graph.pageRank(nodes, edges, "id", iters = 2)
-    try {
-      val p = plan(df)
-      assert(!p.contains("CartesianProduct"),
-        s"the one-row dangling-mass join must broadcast, never cartesian:\n$p")
+  test("graph loops plan every round against leaves, never the caller's lineage") {
+    // a predicate no loop writes itself, planted in the caller's input
+    // lineage: it may appear only in the plans that checkpoint the
+    // inputs into leaves, never in a round's plan (a persisted input
+    // would print — and re-analyse — its cached lineage every round)
+    val marker = "987654321"
+    // RDD-backed inputs: the optimizer would evaluate a filter over a
+    // local table at planning time, and the marker with it
+    def planted(df: DataFrame, c: String) = df.filter(col(c) =!= lit(987654321L))
+    val sc = spark.sparkContext
+    val nodes = planted(sc.parallelize(0L until 12L, 3).toDF("id"), "id")
+    val und = Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 4L), (4L, 5L), (5L, 6L), (7L, 8L))
+    val edges = planted(sc.parallelize(und.flatMap { case (a, b) => Seq((a, b), (b, a)) }, 3)
+      .toDF("src", "dst"), "src")
+    val pairs = planted(sc.parallelize(und, 3).toDF("id_a", "id_b"), "id_a")
+    // (loop, its call, its rounds: the last plans the call executes)
+    val loops = Seq[(String, () => DataFrame, Int)](
+      ("pageRank", () => graft.operators.Graph.pageRank(nodes, edges, "id", iters = 3), 3),
+      ("labelPropagation", () => graft.operators.Graph.labelPropagation(nodes, edges, "id", iters = 3), 3),
+      // path 3-4-5-6 converges after 4 rounds (3 that change + 1 that
+      // observes no change)
+      ("connectedComponents", () => graft.operators.Dedup.connectedComponents(nodes, pairs, "id"), 4))
+    try loops.foreach { case (name, call, rounds) =>
+      val got = LoopProbe.record(spark)(call())._2.plans.map(_.toString)
+      assert(got.size > rounds, s"$name: ${got.size} plans")
+      assert(got.exists(_.contains(marker)), s"$name: marker never planned")
+      got.takeRight(rounds).zipWithIndex.foreach { case (p, i) =>
+        assert(!p.contains(marker), s"$name round ${i + 1} re-plans the caller's lineage:\n$p")
+      }
     } finally graft.util.CacheRegistry.releaseAll()
   }
 
   test("pagerank round join reuses the cached src-partitioned edge layout") {
-    // the r15 pre-partition pin: the persisted edges-with-outdegree
-    // table carries HashPartitioning(src) INSIDE the cache, so a
-    // rank-side join co-partitions against it with exactly ONE fresh
-    // exchange (the node-scale rank side) — the edge table never
-    // re-shuffles after round 0
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    // the r15 pre-partition pin, re-derived for the checkpoint leaf: the
+    // edges-with-outdegree leaf keeps hashpartitioning(src, npart) on
+    // its scan, so under the loop conf a rank-side join co-partitions
+    // against it with exactly ONE fresh exchange (the node-scale rank
+    // side) — the edge table never re-shuffles
+    withoutAutoBroadcast {
       val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L))
         .toDF("src", "dst").repartition(4)
-      val eo = graft.operators.Graph.edgesWithOutdeg(edges, "src", "dst")
-      eo.count() // materialize the cache
-      val r = Seq((1L, 10L), (2L, 20L), (3L, 5L)).toDF("id", "r").repartition(4)
-      val joined = r.as("rr").join(eo.as("ee"), col("rr.id") === col("ee.src"))
-      val p = plan(joined)
-      assert(p.contains("InMemoryTableScan"), p)
-      // count only the OUTER plan's exchanges (toString also prints the
-      // cached subtree under InMemoryRelation; its build-time shuffles
-      // ran once and are not per-round cost): the rank side brings its
-      // fixture round-robin + the one co-partitioning hash exchange;
-      // the edge side must sit directly on the cached scan
-      val outer = p.substring(0, p.indexOf("InMemoryRelation"))
-      assert("Exchange".r.findAllIn(outer).length == 2,
-        s"edge side must reuse the cached hash(src) layout:\n$p")
-      assert(!outer.matches("(?s).*Exchange[^\\n]*\\n[^\\n]*InMemoryTableScan.*"),
-        s"no exchange may feed the cached edge scan:\n$p")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      graft.util.CacheRegistry.releaseAll()
+      graft.util.Iterative.withLoopConf(spark, 3) {
+        val eo = graft.util.Iterative.leaf(
+          graft.operators.Graph.edgesWithOutdeg(edges, 3))._1
+        try {
+          val r = Seq((1L, 10L), (2L, 20L), (3L, 5L)).toDF("id", "r").repartition(4)
+          val joined = r.as("rr").join(eo.as("ee"), col("rr.id") === col("ee.src"))
+          val ex = joined.queryExecution.executedPlan
+          val p = ex.toString
+          assert(!p.contains("AdaptiveSparkPlan") && !p.contains("InMemoryRelation"), p)
+          val scans = ex.collect { case s: org.apache.spark.sql.execution.RDDScanExec => s }
+          assert(scans.size == 1, p)
+          // the rank side brings its fixture round-robin + the one
+          // co-partitioning hash exchange; no exchange sits above the leaf
+          val shuffles = ex.collect { case e: ShuffleExchangeExec => e }
+          assert(shuffles.size == 2, s"edge side must reuse the leaf's hash(src) layout:\n$p")
+          assert(!shuffles.exists(_.find(_ eq scans.head).isDefined),
+            s"no exchange may feed the edge leaf scan:\n$p")
+        } finally graft.util.Iterative.release(eo)
+      } : Unit
     }
   }
 
   test("cc message join reuses the cached dst-partitioned edge layout under the loop conf") {
-    // the r16 pin for the connectedComponents round shape: the phase-2
-    // edge cache carries HashPartitioning(dst, npart) INSIDE the
-    // persist, and the loop plans with AQE off at exactly npart
-    // shuffle partitions (Iterative.withLoopConf) — so the per-round
-    // message join co-partitions against the cached layout with ONE
+    // the r16 pin for the connectedComponents round shape, re-derived
+    // for the phase-2 checkpoint leaf: it carries hashpartitioning(dst,
+    // npart) on its scan, and the loop plans with AQE off at exactly
+    // npart shuffle partitions (Iterative.withLoopConf) — so the
+    // per-round message join co-partitions against the leaf with ONE
     // fresh exchange (the node-scale frontier side); the edge table
-    // never re-shuffles after materialization.
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L))
-        .toDF("src", "dst").repartition(2, col("dst")).persist()
-      edges.count() // materialize the cache (phase 2 of the CC loop)
+    // never re-shuffles after the checkpoint.
+    withoutAutoBroadcast {
       graft.util.Iterative.withLoopConf(spark, 2) {
-        val frontier = Seq((1L, 1L), (2L, 2L)).toDF("_fid", "_flabel").repartition(4)
-        val joined = edges.join(frontier, edges("dst") === col("_fid"))
-          .select(edges("src").as("id"), col("_flabel").as("_m"))
-        val p = plan(joined)
-        assert(p.contains("InMemoryTableScan"), p)
-        // the cached subtree (below InMemoryRelation) materialized once
-        // under AQE at cache-build time; only the OUTER per-round plan
-        // must be non-adaptive
-        val outer = p.substring(0, p.indexOf("InMemoryRelation"))
-        assert(!outer.contains("AdaptiveSparkPlan"),
-          s"loop plans must be non-adaptive (withLoopConf):\n$p")
-        // the frontier side exchanges exactly once (its co-partitioning
-        // hash); the edge side — printed before the InMemoryRelation
-        // block — must sit directly on the cached scan, no fresh
-        // exchange (toString prints the SMJ's left/edge child first, so
-        // `outer` covers exactly that side)
-        assert("Exchange hashpartitioning\\(_fid".r.findAllIn(p).length == 1,
-          s"the frontier side must exchange exactly once:\n$p")
-        assert(!outer.contains("Exchange"),
-          s"no exchange may feed the cached edge scan:\n$p")
+        val edges = graft.util.Iterative.leaf(Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L))
+          .toDF("src", "dst").repartition(2, col("dst")))._1
+        try {
+          val frontier = Seq((1L, 1L), (2L, 2L)).toDF("_fid", "_flabel").repartition(4)
+          val joined = edges.join(frontier, edges("dst") === col("_fid"))
+            .select(edges("src").as("id"), col("_flabel").as("_m"))
+          val ex = joined.queryExecution.executedPlan
+          val p = ex.toString
+          assert(!p.contains("AdaptiveSparkPlan"),
+            s"loop plans must be non-adaptive (withLoopConf):\n$p")
+          val scans = ex.collect { case s: org.apache.spark.sql.execution.RDDScanExec => s }
+          assert(scans.size == 1, p)
+          // the frontier side exchanges exactly once (its co-partitioning
+          // hash); the edge side must sit directly on the leaf's scan
+          assert("Exchange hashpartitioning\\(_fid".r.findAllIn(p).length == 1,
+            s"the frontier side must exchange exactly once:\n$p")
+          assert(!ex.collect { case e: ShuffleExchangeExec => e }
+              .exists(_.find(_ eq scans.head).isDefined),
+            s"no exchange may feed the edge leaf scan:\n$p")
+        } finally graft.util.Iterative.release(edges)
       } : Unit
-      edges.unpersist()
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("mutual_knn symmetrization reads ONE cached ranking on both join sides") {
@@ -388,14 +401,14 @@ class PlanShapeSpec extends SparkSpec {
     // change: `sbt "runMain graft.tools.PlanCounts"` prints the fresh
     // counts; update this map in the same commit as the plan change.
     val expected = Map(
-      "pagerank_centrality"    -> ((1, 0, 0)),  // checkpointed rounds truncate the tail plan
-      "centrality_gate"        -> ((2, 3, 3)),  // bars broadcast; corpus never shuffle-joins
+      "pagerank_centrality"    -> ((0, 0, 0)),  // the result is the last round's leaf; at 1 loop partition it is SinglePartition, so the orderBy needs no exchange
+      "centrality_gate"        -> ((0, 3, 3)),  // bars broadcast; corpus never shuffle-joins; the SinglePartition rank leaf feeds the quantile aggregation with no exchange
       "cdc_chunk_dedup"        -> ((3, 0, 0)),  // token window + hash window + orderBy, NO join
       "bm25_index"             -> ((2, 0, 0)),
       "bm25_index_append"      -> ((2, 0, 0)),
       "bm25_topk"              -> ((4, 1, 1)),  // the ONE join is the broadcast term join
-      "dedup_canonicalize"     -> ((3, 1, 2)),  // r16: CC's phase-2 edge repartition moved behind its own eager cache, off the consumer's tail plan
-      "cluster_representative" -> ((3, 1, 2)),  // r16: same — one fewer tail exchange per CC consumer
+      "dedup_canonicalize"     -> ((4, 1, 2)),  // CC's label leaf is SinglePartition at 1 loop partition (its rounds run with no exchange); the consumer's join shuffles both sides into the session's partitions
+      "cluster_representative" -> ((4, 1, 2)),  // same: +1 tail exchange on the SinglePartition label leaf
       "dup_span_detect"        -> ((4, 1, 1)),
       "minhash_lsh_eval"       -> ((46, 22, 32)), // dual-truth composite; r16: the corpus-scale truth-join sides carry shuffle_hash hints (a blind post-explode size estimate broadcast the exploded shingle table and OOM'd the 10x smoke) — 8 broadcasts became shuffles
       "winnow_fingerprint"     -> ((2, 0, 0)),  // doc window + orderBy; distinct reuses
@@ -407,7 +420,7 @@ class PlanShapeSpec extends SparkSpec {
       "setsim_join_rs"         -> ((5, 5, 5)),   // two-sided prefix join: same family as setsim_join minus the self-join's extra persist exchange
       "bitext_mine_ann"        -> ((24, 12, 23)), // r15 §8 reshape: the bucket join fans out 16-byte (id, bucket) keys, vectors re-attach by two id joins AFTER the pair set is fixed — more (tiny) plan nodes, but the probe explode no longer replicates payloads (311→18 MB measured shuffle) and the provably-no-op pair dedup exchange is gone
       "shard_balance"          -> ((5, 1, 1)),   // two-phase cumsum: range partition + per-partition window + broadcast offsets + summary agg
-      "takedown_propagate"     -> ((6, 3, 5)),   // minhash pairs + CC label join; cluster table touched only by broadcast joins (r16: −2 tail exchanges from the CC two-phase edge cache)
+      "takedown_propagate"     -> ((8, 3, 5)),   // minhash pairs + CC label join; cluster table touched only by broadcast joins (+2 tail exchanges: the CC label leaf is SinglePartition, as in dedup_canonicalize)
       "mink_score"             -> ((10, 3, 3)),  // r15: per-doc totals ride a second window over the rank window's doc partition — the separate totals agg re-ran the whole bigramLp chain and joined it back (15,7,7 → 10,3,3)
       // r14 pins (r13 verdict task 5): the remaining multi-second rows
       "curriculum_order"       -> ((10, 3, 3)),  // two range-partitioned cumsums (2 range + window shuffles each) + broadcast offsets
