@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 import graft.functions.Norm
 
@@ -300,8 +301,9 @@ object Geocode {
     *  3. only the candidates of the unresolved delta go to `resolver`
     *     — the external geocoder stage (candidates in:
     *     `(id, candidate, rank)`, exactly [[expand]] of the delta rows;
-    *     hits out: `(candidate, lat, lng)`; wrap the real HTTP call in
-    *     RateLimited per A14 — specs inject a deterministic fake);
+    *     hits out: `(candidate, lat, lng)`, coordinates cast to
+    *     DOUBLE; wrap the real HTTP call in RateLimited per A14 —
+    *     specs inject a deterministic fake);
     *  4. fresh hits UPSERT into the cache snapshot under `batchId`
     *     (one id per day), so run N+1's cache holds every hit from
     *     runs 1..N, and a replayed day re-merges idempotently from the
@@ -319,8 +321,12 @@ object Geocode {
     val payload = Seq("lat", "lng")
     val cands = expand(rows, idCol, addrCol)
     graft.util.CacheRegistry.register(cands.persist()) // every consumer below
+    // the cache is this function's own snapshot sink, written below as
+    // (query, lat, lng): its schema is known, so no footer job reads it
+    val cacheSchema = StructType(Seq(StructField("query", StringType),
+      StructField("lat", DoubleType), StructField("lng", DoubleType)))
     val cache =
-      try Some(EventStream.readLatestState(rows.sparkSession, cacheDir))
+      try Some(EventStream.readLatestState(rows.sparkSession, cacheDir, Some(cacheSchema)))
       catch { case _: IllegalArgumentException => None } // first run: no snapshot
     val cacheHits = cache.map(c =>
       bestHit(cands.join(c, col("candidate") === col("query")), idCol, payload)
@@ -339,7 +345,8 @@ object Geocode {
       // resolver returns several
       .groupBy(col("candidate"))
       .agg(min(struct(col("lat"), col("lng"))).as("_p"))
-      .select(col("candidate"), col("_p.lat").as("lat"), col("_p.lng").as("lng"))
+      .select(col("candidate"), col("_p.lat").cast("double").as("lat"),
+        col("_p.lng").cast("double").as("lng"))
       .localCheckpoint(true)
     val freshBest = bestHit(delta.join(fresh, Seq("candidate")), idCol, payload)
       .withColumn("source", lit("fresh"))

@@ -13,7 +13,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * is still cached from the first one. `driver_cpu_sec` is the CPU
   * time of the calling thread during the warm execution: analysis,
   * optimization, planning and job submission — the cost a row pays per
-  * query and per loop round, apart from its tasks. Run:
+  * query and per loop round, apart from its tasks. `stream_*` rows add
+  * `state_store_passes`, [[graft.streaming.StreamTelemetry.maxStorePasses]]
+  * of the warm execution: 1 when every stateful operator ran once per
+  * trigger (4 for a stream-stream join's four stores). Run:
   * `sbt "runMain graft.tools.JobCount <row> [row ...]"` with the usual
   * SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS env. One JSON line per row. */
 object JobCount {
@@ -55,6 +58,7 @@ object JobCount {
       graft.util.CacheRegistry.releaseAll()
       Thread.sleep(400) // listener bus drains asynchronously
       jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0); shufWrite.set(0)
+      graft.streaming.StreamTelemetry.reset()
       val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val cpu0 = threads.getCurrentThreadCpuTime
       val t0 = System.nanoTime()
@@ -64,7 +68,10 @@ object JobCount {
       val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       graft.util.CacheRegistry.releaseAll()
       Thread.sleep(400) // listener bus drains asynchronously
-      println(f"""{"row":"$name","jobs":${jobs.get},"stages":${stages.get},"tasks":${tasks.get},"task_sec":${taskMs.get / 1e3}%.2f,"shuffle_write_mb":${shufWrite.get / 1e6}%.2f,"wall_sec":$wall%.2f,"codegen_compiles":$compiles,"driver_cpu_sec":$driverCpu%.2f}""")
+      val passes =
+        if (name.startsWith("stream_")) s""","state_store_passes":${graft.streaming.StreamTelemetry.maxStorePasses}"""
+        else ""
+      println(f"""{"row":"$name","jobs":${jobs.get},"stages":${stages.get},"tasks":${tasks.get},"task_sec":${taskMs.get / 1e3}%.2f,"shuffle_write_mb":${shufWrite.get / 1e6}%.2f,"wall_sec":$wall%.2f,"codegen_compiles":$compiles,"driver_cpu_sec":$driverCpu%.2f$passes}""")
     }
     graft.util.Fixtures.sweep(spark)
     spark.stop()

@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftDataset, Observation, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{coalesce, count, lit}
 
@@ -80,9 +80,12 @@ object Iterative {
   }
 
   /** drop a [[leaf]]'s checkpointed blocks (non-blocking). Only for a
-    * leaf nothing still reads: its blocks are its only copy. */
+    * leaf nothing still reads: its blocks are its only copy. Goes
+    * through `SparkContext.unpersistRDD`, not `RDD.unpersist`, which
+    * WARNs for every locally checkpointed RDD that it cannot be
+    * recomputed — once per leaf, once per trigger on a stream. */
   def release(leaf: DataFrame): Unit = leaf.queryExecution.logical match {
-    case l: LogicalRDD => l.rdd.unpersist(blocking = false)
+    case l: LogicalRDD => GraftDataset.unpersistRDD(l.rdd, blocking = false)
     case _ => ()
   }
 

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
@@ -34,6 +36,42 @@ class IterativeSpec extends SparkSpec {
       assert(lf.as[Long].collect().sorted.toSeq == (0L until 10L))
     } finally Iterative.release(lf)
     assert(persisted == before)
+  }
+
+  test("release logs no WARN and leaves no block behind") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val me = Thread.currentThread.getName
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("release-warns", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN) && e.getThreadName == me)
+          warns.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    def rddOf(lf: DataFrame) = lf.queryExecution.logical
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
+    try {
+      // the capture sees Spark's WARN for a locally checkpointed RDD
+      val probe = spark.range(5).toDF("x").localCheckpoint(true)
+      rddOf(probe).unpersist()
+      assert(warns.asScala.exists(_.contains("locally checkpointed")), warns)
+      warns.clear()
+      val (lf, _) = Iterative.leaf(spark.range(100).toDF("x").repartition(3))
+      val id = rddOf(lf).id
+      assert(org.apache.spark.GraftBlocks.of(id).nonEmpty)
+      Iterative.release(lf)
+      assert(warns.isEmpty, warns)
+      assert(!spark.sparkContext.getPersistentRDDs.contains(id))
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (org.apache.spark.GraftBlocks.of(id).nonEmpty && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(org.apache.spark.GraftBlocks.of(id).isEmpty, "released blocks still held")
+    } finally root.removeAppender(appender)
   }
 
   test("pageRank and labelPropagation size the edge layout from the edge count") {

@@ -138,6 +138,96 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("D5 upsert sink runs the stream's stateful operator once per trigger and keeps no leaf") {
+    import org.apache.spark.sql.functions.{col, lit, sum}
+    implicit val ctx = spark.sqlContext
+    val dir = tempDir("graft_upsert_once")
+    val keys = Seq("window_start", "event_type", "batch_id")
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    val ms = MemoryStream[Ev]
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "2") // state partitions, fixed at start
+    val q = try EventStream.dedupWithinWatermark(ms.toDF(), "event_id")
+      .writeStream.outputMode("append")
+      .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
+        EventStream.upsertBatch(dir, keys, retainSnapshots = 2)(
+          EventStream.windowAgg(b).withColumn("batch_id", lit(id)), id))
+      .start()
+      finally spark.conf.set("spark.sql.shuffle.partitions", parts)
+    try {
+      ms.addData(Ev(1, ts(5), "view", 1.0), Ev(2, ts(20), "view", 2.0), Ev(3, ts(70), "click", 5.0))
+      q.processAllAvailable()
+      ms.addData(Ev(2, ts(21), "view", 2.0), Ev(4, ts(80), "click", 7.0))
+      q.processAllAvailable()
+      ms.addData(Ev(5, ts(95), "view", 4.0), Ev(4, ts(81), "click", 7.0))
+      q.processAllAvailable()
+      val stateful = q.recentProgress.toSeq.flatMap(_.stateOperators)
+      assert(stateful.size >= 3, q.recentProgress.mkString)
+      stateful.foreach { op =>
+        assert(op.numShufflePartitions == 2 && op.numStateStoreInstances == 2,
+          s"the dedup ran more than once in a trigger: $op")
+      }
+      graft.streaming.StreamTelemetry.reset()
+      graft.streaming.StreamTelemetry.record(q)
+      assert(graft.streaming.StreamTelemetry.maxStorePasses == 1)
+      assert(spark.sparkContext.getPersistentRDDs.size == persisted,
+        "the sink left a batch leaf behind")
+      // redelivered ids 2 and 4 count once: the published totals are
+      // the batch window aggregate of the distinct events
+      val got = EventStream.readLatestState(spark, dir)
+        .groupBy(col("window_start"), col("event_type"))
+        .agg(sum(col("n_events")), sum(col("sum_value"))).collect()
+        .map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2), r.getDouble(3))).toSet
+      assert(got == Set(
+        ("2024-01-01 00:00:00.0", "view", 2L, 3.0),
+        ("2024-01-01 01:00:00.0", "click", 2L, 12.0),
+        ("2024-01-01 01:00:00.0", "view", 1L, 4.0)))
+    } finally q.stop()
+  }
+
+  test("D5 upsert sink releases its leaf when the write throws") {
+    val dir = tempDir("graft_upsert_fail")
+    // a committed previous snapshot whose data file is not parquet: the
+    // merge's read of it fails inside the snapshot write job
+    val prev = new java.io.File(s"$dir/snapshots/0")
+    prev.mkdirs()
+    java.nio.file.Files.writeString(new java.io.File(prev, "part-00000.parquet").toPath, "not parquet")
+    new java.io.File(prev, "_SUCCESS").createNewFile()
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    intercept[Exception] {
+      EventStream.upsertBatch(dir, Seq("event_type"))(Seq(("view", 3L)).toDF("event_type", "n"), 1L)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size == persisted,
+      "a failed write left the batch leaf behind")
+    assert(!new java.io.File(s"$dir/snapshots/1/_SUCCESS").exists())
+  }
+
+  test("D5 upsert snapshots are sized from their bytes: one file when small") {
+    val maxBytes = "spark.sql.files.maxPartitionBytes"
+    def dataFiles(dir: String, id: Long): Int =
+      new java.io.File(s"$dir/snapshots/$id").listFiles()
+        .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    // 200 rows over 8 partitions: a write per merge partition would
+    // leave 8 files
+    val batch = (0 until 200).map(i => (s"k$i", i.toLong)).toDF("k", "n").repartition(8)
+    val small = tempDir("graft_upsert_small")
+    EventStream.upsertBatch(small, Seq("k"))(batch, 0L)
+    EventStream.upsertBatch(small, Seq("k"))(batch.limit(10), 1L)
+    assert(dataFiles(small, 0L) == 1 && dataFiles(small, 1L) == 1)
+    // a tiny split size: the count follows the bytes (200 rows at the
+    // schema's default row size), never the merge's partition count
+    val tiny = tempDir("graft_upsert_tiny")
+    val was = spark.conf.getOption(maxBytes)
+    spark.conf.set(maxBytes, "1024")
+    try EventStream.upsertBatch(tiny, Seq("k"))(batch, 0L)
+    finally was.fold(spark.conf.unset(maxBytes))(spark.conf.set(maxBytes, _))
+    val expected = math.ceil(200.0 * batch.schema.defaultSize / 1024).toInt
+    assert(expected > 1 && expected < 8)
+    assert(dataFiles(tiny, 0L) == expected)
+    assert(EventStream.readLatestState(spark, tiny).count() == 200)
+    assert(EventStream.readLatestState(spark, small).count() == 200)
+  }
+
   test("D6 streaming incremental minhash dedup: batches check the persisted index, replay-safe") {
     implicit val ctx = spark.sqlContext
     val dir = tempDir("graft_sdedup")
