@@ -20,6 +20,24 @@ import org.apache.spark.sql.SparkSession
   * [[CodegenCacheEntries]] both working sets stay cached: 0 compiles per
   * warm roster run, at most 20 per warm curation run (classes whose
   * code differs per run). A cached class costs a few KB of metaspace.
+  *
+  * `file:` paths resolve to [[graft.io.NioLocalFileSystem]] (Hadoop
+  * `FileSystem`) and [[graft.io.NioLocalFs]] (`FileContext`, the path
+  * streaming checkpoints and state-store commits take), not to
+  * Hadoop's own local filesystem (here Hive's `ProxyLocalFileSystem`
+  * over it, which Spark's Hive jar registers). Without the native
+  * Hadoop library that one forks `chmod` for every file and directory
+  * it creates and `readlink` twice per FileContext rename. On a
+  * 4-core host one small-file create-and-rename took ~6 ms through
+  * `FileSystem` and ~27 ms through `FileContext` on one thread (~10
+  * and ~40 ms with four threads at once), against 0.2-0.7 ms through
+  * the graft classes, and a perfbench `event_stream` run started ~2300
+  * processes (now 6, at JVM start and exit). The graft classes make
+  * the same calls as syscalls; checksums, renames and the permission
+  * bits written are Hadoop's. Hadoop caches a `FileSystem` per scheme
+  * and user, not per conf, so a local `FileSystem` created in the JVM
+  * before the first session, from a conf without these keys, stays
+  * Hadoop's.
   */
 object GraftSession {
 
@@ -54,6 +72,8 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.NioLocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

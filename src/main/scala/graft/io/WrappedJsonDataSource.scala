@@ -352,7 +352,10 @@ private[graft] class WrappedJsonWrite(path: String, schema: StructType,
     * The FileContext OVERWRITE rename is atomic where the FS supports
     * it (HDFS, posix local); the delete+rename fallback has a brief
     * no-pointer window — [[WrappedPublish.resolveCurrent]]'s
-    * newest-committed fallback covers readers through it. */
+    * newest-committed fallback covers readers through it — and logs
+    * the rename's exception to stderr, so a broken FileContext (say, a
+    * misregistered `AbstractFileSystem`) does not lose atomicity
+    * silently. */
   private def swapPointer(f: FileSystem, snapDir: Path): Unit = {
     val tmpPtr = new Path(path, s"current.tmp-$queryId")
     f.delete(tmpPtr, false) // this query's own stale tmp from a crash
@@ -364,7 +367,9 @@ private[graft] class WrappedJsonWrite(path: String, schema: StructType,
       org.apache.hadoop.fs.FileContext.getFileContext(ptr.toUri,
           f.getConf)
         .rename(tmpPtr, ptr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    } catch { case _: Exception =>
+    } catch { case e: Exception =>
+      Console.err.println(s"[graft-wrapped] atomic pointer swap failed " +
+        s"(${e.getClass.getName}: ${e.getMessage}); falling back to delete-then-rename")
       f.delete(ptr, false)
       if (!f.rename(tmpPtr, ptr))
         throw new IllegalStateException(s"graft-wrapped: pointer swap to $snapDir failed")

@@ -144,17 +144,17 @@ private[sources] class WarcScanBuilder(path: String)
     // Recursive walk: Common-Crawl-style layouts nest shards under
     // segment directories (crawl/segments/<seg>/warc/*.warc.gz), so a
     // flat listStatus would silently plan zero splits for exactly the
-    // layout the format exists to read.
+    // layout the format exists to read. A listStatus walk, not
+    // listFiles: a LocatedFileStatus copies each file's permission,
+    // which Hadoop's local filesystem reads by forking `ls -ld`.
+    def walk(dir: Path): Seq[Path] = fs.listStatus(dir).toSeq.flatMap { st =>
+      if (st.isDirectory) walk(st.getPath) else Seq(st.getPath)
+    }
     val files =
-      if (fs.getFileStatus(root).isDirectory) {
-        val it = fs.listFiles(root, /* recursive = */ true)
-        val acc = scala.collection.mutable.ArrayBuffer.empty[Path]
-        while (it.hasNext) {
-          val p = it.next().getPath
-          if (p.getName.endsWith(".warc") || p.getName.endsWith(".warc.gz")) acc += p
-        }
-        acc.sortBy(_.toString).toArray
-      } else Array(root)
+      if (fs.getFileStatus(root).isDirectory)
+        walk(root).filter(p => p.getName.endsWith(".warc") || p.getName.endsWith(".warc.gz"))
+          .sortBy(_.toString).toArray
+      else Array(root)
     require(files.nonEmpty,
       s"graft-warc: no .warc/.warc.gz files under $path (searched recursively; " +
         "glob patterns are not supported — pass a directory or a single file)")

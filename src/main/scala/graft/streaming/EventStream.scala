@@ -503,11 +503,19 @@ object EventStream {
     * ms; a trigger took ~1030-1100 ms at p50. After: 4 store instances
     * (~360 ms summed commit, 640 rows), the leaf's job (~170-230 ms)
     * in place of the footer job, a ~165 ms write of one file, ~15 ms
-    * for the copy and the prune; ~760 ms per trigger at p50. A state
-    * task's commit took ~32 ms alone but ~75 ms with 4 or 8 running at
-    * once, and RocksDB with changelog checkpointing left the summed
-    * commit time where it was (~310 ms either way), so the store
-    * provider is not the lever at this size.
+    * for the copy and the prune; ~760 ms per trigger at p50. Much of
+    * what was left was Hadoop's local filesystem, not the store
+    * provider (RocksDB summed the same commit time): without the native
+    * library it forked `chmod` for every checkpoint, state and snapshot
+    * file and directory it created and `readlink` twice per FileContext
+    * rename, ~2300 child processes per 2-iteration run (JFR), and
+    * forks from 4 state tasks committing at once contend. With
+    * [[graft.io.NioLocalFs]] (registered by
+    * [[graft.GraftSession.local]]) a trigger starts none: the summed
+    * state commit per trigger went 269-293 → 23-24 ms, the WAL and
+    * offset commits 30-31 → 1-2 ms each, `addBatch` 533 → 411-438 ms
+    * (traced, seeds 1-2), and a trigger took ~457 ms at p50 (~686 ms
+    * before, 10 alternating pairs).
     *
     * Use with `ds.writeStream.foreachBatch(EventStream.upsertBatch(dir) _)`
     * on an update-mode aggregate, or call per-batch as here. */

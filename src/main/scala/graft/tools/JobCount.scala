@@ -16,7 +16,14 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * query and per loop round, apart from its tasks. `stream_*` rows add
   * `state_store_passes`, [[graft.streaming.StreamTelemetry.maxStorePasses]]
   * of the warm execution: 1 when every stateful operator ran once per
-  * trigger (4 for a stream-stream join's four stores). Run:
+  * trigger (4 for a stream-stream join's four stores).
+  * `process_spawns` counts the child processes the JVM starts during
+  * the warm execution (JFR `jdk.ProcessStart` events,
+  * [[graft.util.ProcessSpawns]]), each command echoed to stderr: 0 when
+  * no Hadoop shell call (`chmod`, `readlink`, `ls`) sits on the row's
+  * file paths. Spark itself forks `rm -rf` for a session's artifact
+  * directory when GC collects the session (every streaming query
+  * clones one), so a `stream_*` row can read 1-2 on GC timing. Run:
   * `sbt "runMain graft.tools.JobCount <row> [row ...]"` with the usual
   * SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS env. One JSON line per row. */
 object JobCount {
@@ -60,18 +67,20 @@ object JobCount {
       jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0); shufWrite.set(0)
       graft.streaming.StreamTelemetry.reset()
       val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      val cpu0 = threads.getCurrentThreadCpuTime
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      val driverCpu = (threads.getCurrentThreadCpuTime - cpu0) / 1e9
+      val ((wall, driverCpu), spawns) = graft.util.ProcessSpawns.during {
+        val cpu0 = threads.getCurrentThreadCpuTime
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).count()
+        ((System.nanoTime() - t0) / 1e9, (threads.getCurrentThreadCpuTime - cpu0) / 1e9)
+      }
       val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      spawns.foreach(c => Console.err.println(s"[job-count] $name started: $c"))
       graft.util.CacheRegistry.releaseAll()
       Thread.sleep(400) // listener bus drains asynchronously
       val passes =
         if (name.startsWith("stream_")) s""","state_store_passes":${graft.streaming.StreamTelemetry.maxStorePasses}"""
         else ""
-      println(f"""{"row":"$name","jobs":${jobs.get},"stages":${stages.get},"tasks":${tasks.get},"task_sec":${taskMs.get / 1e3}%.2f,"shuffle_write_mb":${shufWrite.get / 1e6}%.2f,"wall_sec":$wall%.2f,"codegen_compiles":$compiles,"driver_cpu_sec":$driverCpu%.2f$passes}""")
+      println(f"""{"row":"$name","jobs":${jobs.get},"stages":${stages.get},"tasks":${tasks.get},"task_sec":${taskMs.get / 1e3}%.2f,"shuffle_write_mb":${shufWrite.get / 1e6}%.2f,"wall_sec":$wall%.2f,"codegen_compiles":$compiles,"driver_cpu_sec":$driverCpu%.2f,"process_spawns":${spawns.size}$passes}""")
     }
     graft.util.Fixtures.sweep(spark)
     spark.stop()

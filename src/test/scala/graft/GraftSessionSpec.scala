@@ -38,6 +38,19 @@ class GraftSessionSpec extends SparkSpec {
       "GraftExtensions not installed")
   }
 
+  test("the session resolves file:/// to graft's NIO local filesystem, for FileSystem and FileContext") {
+    // Hadoop caches a FileSystem per scheme and user, whatever the conf:
+    // assert the instances the session resolves, not its conf values
+    val conf = spark.sessionState.newHadoopConf()
+    val root = java.net.URI.create("file:///")
+    val fs = org.apache.hadoop.fs.FileSystem.get(root, conf)
+    assert(fs.isInstanceOf[graft.io.NioLocalFileSystem], fs.getClass)
+    assert(org.apache.hadoop.fs.FileSystem.getLocal(conf).getRaw
+      .isInstanceOf[graft.io.NioRawLocalFileSystem])
+    val fc = org.apache.hadoop.fs.FileContext.getFileContext(root, conf)
+    assert(fc.getDefaultFileSystem.isInstanceOf[graft.io.NioLocalFs], fc.getDefaultFileSystem.getClass)
+  }
+
   test("a rerun of more generated classes than Spark's default cache holds compiles nothing") {
     // Spark's default cache keeps 100 classes; 150 distinct projections
     // evict each other there and every one recompiles on the second pass

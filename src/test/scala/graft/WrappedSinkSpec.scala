@@ -441,6 +441,25 @@ class WrappedSinkSpec extends SparkSpec {
     assert(ptr == snapshotNames(dir).last, s"replay must finish the pointer swap: $ptr")
   }
 
+  test("A12 DSv2 sink: a FileContext rename that throws still swaps the pointer and names the exception") {
+    val dir = tempDir("wrapped_fc_refused")
+    val child = spark.newSession()
+    child.conf.set("fs.AbstractFileSystem.file.impl", classOf[RenameRefusingFs].getName)
+    child.conf.set("fs.file.impl.disable.cache", "true") // a FileSystem that carries this conf
+    val err = new java.io.ByteArrayOutputStream()
+    val prior = org.apache.spark.sql.SparkSession.getActiveSession
+    org.apache.spark.sql.SparkSession.setActiveSession(child)
+    try Console.withErr(err) {
+      child.createDataFrame(Seq(("north", 1L), ("south", 2L))).toDF("county", "id")
+        .write.format("graft-wrapped").option("groupCol", "county").mode("overwrite").save(dir)
+    } finally prior match {
+      case Some(s) => org.apache.spark.sql.SparkSession.setActiveSession(s)
+      case None => org.apache.spark.sql.SparkSession.clearActiveSession()
+    }
+    assert(currentDir(dir).endsWith(snapshotNames(dir).last), "the pointer must still swap")
+    assert(err.toString.contains("java.io.IOException: rename refused"), err.toString)
+  }
+
   test("A12 DSv2 sink: null + unsafe group values, name-collision detection, option and schema validation") {
     val dir = tempDir("wrapped_names")
     Seq((Option("a/b"), 1L), (Option.empty[String], 2L), (Option("ok"), 3L))
@@ -563,4 +582,13 @@ class WrappedSinkSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("no committed snapshot"), e.getMessage)
   }
+}
+
+/** a local FileContext whose renames throw */
+class RenameRefusingFs(uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration)
+    extends org.apache.hadoop.fs.DelegateToFileSystem(uri,
+      new org.apache.hadoop.fs.RawLocalFileSystem, conf, "file", false) {
+  override def getUriDefaultPort: Int = -1
+  override def renameInternal(src: Path, dst: Path, overwrite: Boolean): Unit =
+    throw new java.io.IOException("rename refused")
 }
